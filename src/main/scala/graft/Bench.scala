@@ -67,10 +67,7 @@ object Bench {
         // rep) pays its OWN pipeline: d02 fills the LSH cache that d07
         // would otherwise read, turning d07's number into
         // clustering-only — a measurement artifact, not a speedup.
-        graft.operators.Dedup.releaseLshCache()
-        graft.operators.Similarity.releaseSimCache()
-        graft.operators.MapBench.releaseFleetCache()
-        graft.operators.LinkGraph.releaseGraphCache()
+        Pins.releaseAll()
         System.gc()
         Thread.sleep(50)
         val t0 = System.nanoTime()

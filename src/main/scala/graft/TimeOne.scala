@@ -10,10 +10,7 @@ object TimeOne {
     val reps = if (args.length > 2) args(2).toInt else 2
     val spark = Sessions.local()
     (1 to reps).foreach { i =>
-      graft.operators.Dedup.releaseLshCache()
-      graft.operators.Similarity.releaseSimCache()
-      graft.operators.MapBench.releaseFleetCache()
-      graft.operators.LinkGraph.releaseGraphCache()
+      Pins.releaseAll()
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, dir)
         .write.format("noop").mode("overwrite").save()

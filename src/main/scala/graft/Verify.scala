@@ -81,10 +81,7 @@ object Verify {
         // MEMORY_AND_DISK blocks across all 300+ queries in this one
         // session. Safe here: each query's parquet is fully written
         // before the next query builds.
-        graft.operators.Dedup.releaseLshCache()
-        graft.operators.Similarity.releaseSimCache()
-        graft.operators.MapBench.releaseFleetCache()
-        graft.operators.LinkGraph.releaseGraphCache()
+        Pins.releaseAll()
         val t0 = System.nanoTime()
         try {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")

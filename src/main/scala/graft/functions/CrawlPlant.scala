@@ -26,7 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Split semantics replicate Spark's split(txt, " ") with limit -1:
   * every 0x20 byte is a separator (0x20 never occurs inside a UTF-8
-  * multi-byte sequence) and empty words are kept. Char positions are
+  * multi-byte sequence) and empty words are kept; malformed UTF-8 is
+  * first decoded the way split decodes it. Char positions are
   * CODE POINTS (lead-byte counting), exactly like substr/length;
   * the [a-z]{2} test is ASCII-only, like the regex it replaces.
   * CrawlPlantKernelSpec pins byte equality against the expression
@@ -42,7 +43,10 @@ object CrawlPlantKernel {
     _.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   def wrap(text: UTF8String, mode: Int): UTF8String = {
-    val bytes = text.getBytes
+    // split(txt, " ") splits the decoded Java String, so malformed
+    // UTF-8 reaches its words with each invalid sequence as U+FFFD
+    val bytes = (if (text.isValid) text
+      else UTF8String.fromString(text.toString)).getBytes
     val len = bytes.length
     // word boundaries: split on every 0x20, keeping empties
     var nWords = 1
@@ -67,15 +71,11 @@ object CrawlPlantKernel {
         var nc = 0
         var p = s
         while (p < e) {
-          val f = bytes(p) & 0xFF
-          p += (if (f < 0x80) 1 else if (f < 0xE0) 2
-            else if (f < 0xF0) 3 else 4)
+          p += UTF8String.numBytesForFirstByte(bytes(p))
           nc += 1
         }
         if (nc >= 4) {
-          val f0 = bytes(s) & 0xFF
-          val off1 = s + (if (f0 < 0x80) 1 else if (f0 < 0xE0) 2
-            else if (f0 < 0xF0) 3 else 4)
+          val off1 = s + UTF8String.numBytesForFirstByte(bytes(s))
           if (off1 + 1 < e &&
               bytes(off1) >= 'a' && bytes(off1) <= 'z' &&
               bytes(off1 + 1) >= 'a' && bytes(off1 + 1) <= 'z') {

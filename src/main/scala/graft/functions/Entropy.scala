@@ -48,17 +48,14 @@ object EntropyKernel {
     val nChars = text.numChars()
     val n = nChars - 1
     if (n < 1) return new GenericArrayData(Array(0L, 0L, 0L))
-    // char → byte offset map (UTF-8 chars span 1-4 bytes)
+    // char → byte offset map, stepping exactly as numChars/substring
+    // do (invalid lead bytes count as 1-byte chars)
     val offs = new Array[Int](nChars + 1)
     var b = 0
     var c = 0
     while (b < bytes.length) {
       offs(c) = b
-      val first = bytes(b) & 0xFF
-      b += (if (first < 0x80) 1
-        else if (first < 0xE0) 2
-        else if (first < 0xF0) 3
-        else 4)
+      b += UTF8String.numBytesForFirstByte(bytes(b))
       c += 1
     }
     offs(nChars) = bytes.length

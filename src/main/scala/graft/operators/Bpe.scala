@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Pins, Tables}
 
 /** Distributed byte-pair-encoding merge training + application
   * (SURVEY.md §2d) — the tokenizer-construction step of a training
@@ -85,7 +85,7 @@ object Bpe {
 
   private def trainMergesUncached(spark: SparkSession, dir: String,
       rounds: Int): Seq[Rule] = {
-    var seqs = vocab(spark, dir).localCheckpoint()
+    var seqs = Pins.checkpoint(vocab(spark, dir))
     val rules = Seq.newBuilder[Rule]
     try {
       for (r <- 1 to rounds) {
@@ -109,14 +109,14 @@ object Bpe {
         val merged = pair.replace("| |", "")
         rules += Rule(r, pair, merged, top(0).getLong(1))
         val prev = seqs
-        // eager localCheckpoint: materializes the round AND cuts the
-        // plan back to a one-deep scan of the checkpointed blocks
-        seqs = seqs.withColumn("seq",
-          expr(s"replace(seq, '$pair', '$merged')")).localCheckpoint()
-        prev.unpersist()
+        // eager checkpoint: materializes the round AND cuts the plan
+        // back to a one-deep scan of the checkpointed blocks
+        seqs = Pins.checkpoint(seqs.withColumn("seq",
+          expr(s"replace(seq, '$pair', '$merged')")))
+        Pins.unpin(prev)
       }
       rules.result()
-    } finally seqs.unpersist()
+    } finally Pins.unpin(seqs)
   }
 
   /** d43: the learned merge table itself — one row per round. */
@@ -200,14 +200,18 @@ object Bpe {
       }
     var enc = words.select(col("word")).distinct()
       .withColumn("enc", expr(first))
+    var pinned: Option[DataFrame] = None
     for (batch <- batches.drop(1)) {
       // truncate lineage so the next batch's plan is one replace-chain
-      // deep over materialized blocks, not (rules/batch) chains deep
-      enc = enc.localCheckpoint()
+      // deep over materialized blocks, not (rules/batch) chains deep;
+      // the superseded checkpoint is freed once this one materializes
+      val ck = Pins.checkpoint(enc)
+      pinned.foreach(Pins.unpin)
+      pinned = Some(ck)
       val applied = batch.foldLeft("enc") { (e, ru) =>
         s"replace($e, '${ru.pair}', '${ru.merged}')"
       }
-      enc = enc.withColumn("enc", expr(applied))
+      enc = ck.withColumn("enc", expr(applied))
     }
     enc.select(col("word"),
       (length(col("enc")) - length(expr("replace(enc, ' ', '')")) + 1)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.MapEncoder
 import graft.MapEncoder.{MapSpec, PoiSpec, SubfileSpec, TileSpec, WaySpec}
-import graft.Tables
+import graft.{Pins, Tables}
 import graft.sources.FdoSink
 
 /** g13: the reference's CORE workload end to end — encode a synthetic
@@ -51,19 +51,8 @@ object MapBench {
     rm(new java.io.File(path))
   }
 
-  /** Fleet CachedScan memoized per (session, path-set) — the
-    * Dedup.lshCache pattern. Without this every g14 invocation
-    * persisted a NEW MEMORY_AND_DISK dataset and none was ever
-    * unpersisted (the same stacking-persist leak fixed for LSH in
-    * round 2). [[releaseFleetCache]] is the explicit drop; the bench
-    * calls it between queries. */
-  private val fleetCache = TrieMap.empty[
-    (SparkSession, Seq[String]), graft.sources.Mapsforge.CachedScan]
-
-  def releaseFleetCache(): Unit = {
-    fleetCache.values.foreach(_.release())
-    fleetCache.clear()
-  }
+  /** Forwards to [[graft.Pins.releaseAll]]; perfbench still calls it. */
+  def releaseFleetCache(): Unit = Pins.releaseAll()
 
   /** Pre-encode the synthetic fixture maps g13/g14 read, so a timed
     * run measures the DISTRIBUTED PIPELINE (decode→clip→merge→sink),
@@ -213,8 +202,10 @@ object MapBench {
     val p2 = mapCache.getOrElseUpdate(n / 2, encodeFixture(n / 2))
     // cached scan: the poi and way aggregates are two consumers of
     // one decode (scanMany would run the full binary decode twice);
-    // memoized so repeat invocations reuse one persist (see fleetCache)
-    val scanned = fleetCache.getOrElseUpdate((spark, Seq(p1, p2)),
+    // memoized per (session, path-set) so repeat invocations reuse one
+    // persist instead of stacking a new MEMORY_AND_DISK dataset each
+    // (the round-2 LSH leak); Pins.releaseAll drops it
+    val scanned = Pins.cached((spark, Seq(p1, p2), "g14"))(
       graft.sources.Mapsforge.scanManyCached(spark, Seq(p1, p2)))
     import org.apache.spark.sql.functions._
     val p = scanned.pois.toDF().groupBy(col("fileId"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pins
 import graft.functions.{GeomFunctions, GeomOps}
 import graft.sources.Mapsforge
 import graft.sources.Mapsforge.{Poi, Way}
@@ -260,14 +261,13 @@ object MapPipeline {
     // key collect and the save.
     def numbered(df: org.apache.spark.sql.Dataset[Feature],
         idName: String): DataFrame =
-      df.toDF()
+      Pins.persist(df.toDF()
         .withColumn(idName, monotonically_increasing_id())
         .drop("fid")
         .withColumnsRenamed(Map("level" -> "m2db_level",
           "minz" -> "m2db_minz", "maxz" -> "m2db_maxz",
           "layer" -> "m2db_layer_num", "tags" -> "m2db_tags",
-          "wkb" -> "m2db_geometry"))
-        .persist()
+          "wkb" -> "m2db_geometry")))
 
     val tables = Seq(numbered(rawPoints, "m2db_pnum"),
       numbered(rawLines, "m2db_lnum"), numbered(rawAreas, "m2db_anum"))
@@ -276,7 +276,7 @@ object MapPipeline {
     val Seq((p, pk), (l, lk), (a, ak)) =
       graft.Threads.inParallel(tables.map(t => () => explodeVtags(t)))
     MapTables(p, l, a, (pk ++ lk ++ ak).distinct.sorted,
-      release = () => { tables.foreach(_.unpersist()); scanned.release() },
+      release = () => { tables.foreach(Pins.unpin); scanned.release() },
       decodedTiles = () => scanned.tilesDecoded.value)
   }
 
@@ -305,13 +305,13 @@ object MapPipeline {
     // explodeVtags key collect fills the cache (tile rows come from
     // the decode cache, so the binary decode itself runs exactly
     // once across all three tables) and the sink reads cached rows.
-    val points = mergeFeatures(pointFeatures(pois))
-      .withColumnRenamed("fid", "m2db_pnum").persist()
-    val lines = FeatureMerge.mergeLines(
+    val points = Pins.persist(mergeFeatures(pointFeatures(pois))
+      .withColumnRenamed("fid", "m2db_pnum"))
+    val lines = Pins.persist(FeatureMerge.mergeLines(
       mergeFeatures(lineFeatures(cachedWays)), "m2db_geometry")
-      .withColumnRenamed("fid", "m2db_lnum").persist()
-    val areas = mergeFeatures(areaFeatures(cachedWays))
-      .withColumnRenamed("fid", "m2db_anum").persist()
+      .withColumnRenamed("fid", "m2db_lnum"))
+    val areas = Pins.persist(mergeFeatures(areaFeatures(cachedWays))
+      .withColumnRenamed("fid", "m2db_anum"))
     // r17 (guide §2.6): the three per-table key collects are
     // independent actions — run them from a pool so their merge
     // stages overlap instead of paying three sequential job floors;
@@ -324,7 +324,7 @@ object MapPipeline {
       () => explodeVtags(areas)))
     MapTables(p, l, a, (pk ++ lk ++ ak).distinct.sorted,
       release = () => {
-        Seq(points, lines, areas).foreach(_.unpersist())
+        Seq(points, lines, areas).foreach(Pins.unpin)
         scanned.release()
       },
       decodedTiles = () => scanned.tilesDecoded.value)

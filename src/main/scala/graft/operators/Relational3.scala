@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Pins, Tables}
 
 /** Third tranche of the relational surface (SURVEY.md §2a): OLS
   * regression aggregates and the higher-order array-function surface.
@@ -250,7 +250,10 @@ object Relational3 {
     * relation iteratively, the canonical graph-walk SQL surface
     * (hierarchies, chains, transitive closure). The identical text
     * runs on DuckDB as the oracle; a window formulation cross-checks
-    * it in ScalaTest. */
+    * it in ScalaTest. The successor relation is a
+    * [[graft.Pins.checkpoint]] that the returned plan reads lazily, so
+    * it stays pinned until the caller's next [[graft.Pins.releaseAll]]
+    * (every harness calls it between queries). */
   def q58Recursive(spark: SparkSession, dir: String): DataFrame = {
     // Spark guards recursive CTEs with a 1M-row output limit by
     // default; this recursion is depth-capped by its OWN predicate
@@ -283,7 +286,7 @@ object Relational3 {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("o_custkey"))
       .orderBy(col("o_orderdate"), col("o_orderkey"))
-    val base = Similarity.pinCheckpoint(
+    val base = Pins.checkpoint(
       scoped.read.parquet(s"$dir/orders.parquet")
         .select(col("o_custkey"), col("o_orderkey"),
           lead(col("o_orderkey"), 1).over(w).as("nxt"),

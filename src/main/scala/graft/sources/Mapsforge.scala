@@ -395,10 +395,9 @@ object Mapsforge {
     import spark.implicits._
     val (decoded, counter) =
       decodedTiles(spark, paths, numPartitions, permissive)
-    val cached = decoded.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cached = graft.Pins.persist(decoded)
     CachedScan(cached.flatMap(_._1), cached.flatMap(_._2), counter,
-      () => { cached.unpersist(); () })
+      () => graft.Pins.unpin(cached))
   }
 
   /** Fleet scan: one job decoding tiles from MANY map files. All

@@ -6,14 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.CrawlPlantKernel
 
-/** Pin for the r17 t41/t45 plant kernel: CrawlPlantKernel.wrap must
-  * reproduce the r16 per-word transform expressions BYTE-FOR-BYTE
-  * (the crawl oracles hash every wrapped page), including multi-byte
-  * words, consecutive/leading spaces (split keeps empties), and the
-  * abbreviation/terminator cycles. */
-class CrawlPlantKernelSpec extends AnyFunSuite {
-  import SparkTestSession.spark
-
+/** The reference expressions, shared with the KernelPropertySpec
+  * property over malformed UTF-8. */
+object CrawlPlantKernelSpec {
   /** The pre-r17 expression formulations, verbatim. */
   private def t41WrapExpr(txt: Column): Column = {
     val ws = split(txt, " ")
@@ -67,9 +62,10 @@ class CrawlPlantKernelSpec extends AnyFunSuite {
     }), "")
   }
 
-  private def check(df: org.apache.spark.sql.DataFrame): Unit = {
+  /** Rows where any kernel mode differs from its expression form. */
+  def mismatches(df: org.apache.spark.sql.DataFrame): Long = {
     val txt = trim(col("text"))
-    val bad = df.filter(length(txt) > 0).select(
+    df.filter(length(txt) > 0).select(
       (t41WrapExpr(txt) =!= CrawlPlantKernel.wrapCol(txt,
         CrawlPlantKernel.T41Wrap)).as("b41"),
       (t45WrapExpr(txt) =!= CrawlPlantKernel.wrapCol(txt,
@@ -77,8 +73,21 @@ class CrawlPlantKernelSpec extends AnyFunSuite {
       (t45ExpectedExpr(txt) =!= CrawlPlantKernel.wrapCol(txt,
         CrawlPlantKernel.T45Expected)).as("bex"))
       .filter(col("b41") || col("b45") || col("bex"))
-    assert(bad.count() == 0)
+      .count()
   }
+}
+
+/** Pin for the r17 t41/t45 plant kernel: CrawlPlantKernel.wrap must
+  * reproduce the r16 per-word transform expressions BYTE-FOR-BYTE
+  * (the crawl oracles hash every wrapped page), including multi-byte
+  * words, consecutive/leading spaces (split keeps empties), and the
+  * abbreviation/terminator cycles. */
+class CrawlPlantKernelSpec extends AnyFunSuite {
+  import SparkTestSession.spark
+  import CrawlPlantKernelSpec.mismatches
+
+  private def check(df: org.apache.spark.sql.DataFrame): Unit =
+    assert(mismatches(df) == 0)
 
   test("kernel equals the transform expressions on the corpus") {
     check(Tables.load(spark, "/root/testdata/sf0.001", "documents"))

@@ -5,18 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.EntropyKernel
 
-/** Pin for the r17 t26 kernel move: EntropyKernel.bigramStats must
-  * reproduce the explode + two-aggregate bigram-entropy chain
-  * BIT-FOR-BIT on the real corpus (the registered query's oracle hash
-  * depends on every ni count and every quantized ln), including
-  * multi-byte UTF-8 where the packed byte-window keys must not
-  * collide and NUL-bearing text where the zero-padding argument is
-  * load-bearing. */
-class EntropyKernelSpec extends AnyFunSuite {
-  import SparkTestSession.spark
-
-  /** The pre-r17 expression formulation, verbatim. */
-  private def reference(docs: org.apache.spark.sql.DataFrame) = docs
+/** The reference chain and the kernel form, shared with the
+  * KernelPropertySpec property over malformed UTF-8. */
+object EntropyKernelSpec {
+  /** The pre-r17 expression formulation; its one addition is the
+    * `.cast("long")` on `n` (a no-op on a sum of counts, kept so both
+    * sides compare as longs). */
+  def reference(docs: org.apache.spark.sql.DataFrame) = docs
     .select(col("doc_id"), trim(col("text")).as("t"))
     .filter(length(col("t")) >= 2)
     .select(col("doc_id"), explode(expr(
@@ -31,7 +26,7 @@ class EntropyKernelSpec extends AnyFunSuite {
         round(log(col("ni").cast("double")) * lit(-1e6), 0)
           .cast("long")).as("neg_ln_ni_sum"))
 
-  private def kernel(docs: org.apache.spark.sql.DataFrame) = docs
+  def kernel(docs: org.apache.spark.sql.DataFrame) = docs
     .select(col("doc_id"), trim(col("text")).as("t"))
     .filter(length(col("t")) >= 2)
     .select(col("doc_id"),
@@ -39,6 +34,18 @@ class EntropyKernelSpec extends AnyFunSuite {
     .select(col("doc_id"), col("k").getItem(0).as("n"),
       col("k").getItem(1).as("n_distinct"),
       col("k").getItem(2).as("neg_ln_ni_sum"))
+}
+
+/** Pin for the r17 t26 kernel move: EntropyKernel.bigramStats must
+  * reproduce the explode + two-aggregate bigram-entropy chain
+  * BIT-FOR-BIT on the real corpus (the registered query's oracle hash
+  * depends on every ni count and every quantized ln), including
+  * multi-byte UTF-8 where the packed byte-window keys must not
+  * collide and NUL-bearing text where the zero-padding argument is
+  * load-bearing. */
+class EntropyKernelSpec extends AnyFunSuite {
+  import SparkTestSession.spark
+  import EntropyKernelSpec.{kernel, reference}
 
   test("kernel equals the explode chain on the corpus") {
     val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")

@@ -272,4 +272,67 @@ class KernelPropertySpec extends AnyFunSuite {
           VectorKernel.quantizedSubL2(ga, ga, s, subDim) == 0L
     }
   }
+
+  /** Text as Spark can hold it, NOT only valid UTF-8: well-formed 1-4
+    * byte chars, lead bytes Spark steps over as 1-byte chars
+    * (0x80–0xC1, 0xF5–0xFF), multi-byte sequences cut short (mid-text
+    * and at the end), well-formed-looking but invalid sequences, NULs
+    * and runs of spaces. A binary→string cast
+    * carries the bytes into a row unvalidated, exactly as a parquet
+    * or crawl reader would. */
+  private val rawText: Gen[List[Byte]] = {
+    def utf8(s: String) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val piece = Gen.frequency(
+      8 -> Gen.alphaLowerChar.map(c => Array(c.toByte)),
+      3 -> Gen.const(Array(' '.toByte)),
+      2 -> Gen.oneOf("é", "ß", "—", "日", "本", "😀").map(utf8),
+      2 -> Gen.choose(0x80, 0xC1).map(b => Array(b.toByte)),
+      2 -> Gen.choose(0xF5, 0xFF).map(b => Array(b.toByte)),
+      2 -> Gen.oneOf("é", "—", "日", "😀").flatMap(c =>
+        Gen.choose(1, utf8(c).length - 1).map(utf8(c).take)),
+      // an encoded surrogate, an overlong NUL, a code point > U+10FFFF
+      1 -> Gen.oneOf(Seq(0xED, 0xA0, 0x80), Seq(0xE0, 0x80, 0x80),
+        Seq(0xF4, 0x90, 0x80, 0x80)).map(_.map(_.toByte).toArray),
+      1 -> Gen.const(Array(0.toByte)))
+    Gen.choose(0, 40).flatMap(Gen.listOfN(_, piece))
+      .map(_.flatMap(_.toList))
+  }
+
+  /** A kernel/reference property over batches of [[rawText]] docs:
+    * each case is one Spark job over 48 (doc_id, text) rows, so the
+    * case count is kept small and shrinking is off. */
+  private def forAllDocs(same: org.apache.spark.sql.DataFrame => Boolean)
+      : Unit = {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(6),
+      Prop.forAllNoShrink(Gen.listOfN(48, rawText)) { texts =>
+        same(texts.zipWithIndex.map { case (b, i) => (i.toLong, b.toArray) }
+          .toDF("doc_id", "raw")
+          .select($"doc_id", $"raw".cast("string").as("text")))
+      })
+    assert(res.passed, res.status.toString)
+  }
+
+  private def sameRows(a: org.apache.spark.sql.DataFrame,
+      b: org.apache.spark.sql.DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  test("entropy kernel equals the explode chain on malformed UTF-8") {
+    forAllDocs(docs => sameRows(EntropyKernelSpec.reference(docs),
+      EntropyKernelSpec.kernel(docs)))
+  }
+
+  test("winnow kernel equals the md5 chain on malformed UTF-8") {
+    forAllDocs { docs =>
+      val base = WinnowKernelSpec.baseOf(docs)
+      sameRows(WinnowKernelSpec.referenceFp(base),
+        WinnowKernelSpec.kernelFp(base))
+    }
+  }
+
+  test("crawl plant kernel equals the wrap expressions on malformed UTF-8") {
+    forAllDocs(docs => CrawlPlantKernelSpec.mismatches(docs) == 0)
+  }
 }

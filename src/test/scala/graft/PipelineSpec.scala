@@ -943,19 +943,49 @@ class PipelineSpec extends AnyFunSuite {
     pr.unpersist()
   }
 
-  test("releaseGraphCache frees the localCheckpoint'd round blocks " +
-    "(ADVICE r9: Dataset.unpersist can't reach them)") {
-    import graft.operators.LinkGraph
-    LinkGraph.releaseGraphCache() // reset to a known cache state
-    val before = spark.sparkContext.getPersistentRDDs.size
-    LinkGraph.d32Pagerank(spark, sf).collect()
-    val during = spark.sparkContext.getPersistentRDDs.size
-    assert(during > before,
-      s"pagerank pinned nothing? before=$before during=$during")
-    LinkGraph.releaseGraphCache()
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after == before,
-      s"release leaked persisted RDD blocks: before=$before after=$after")
+  test("Pins.releaseAll frees every query's pins; early frees leave none") {
+    import graft.operators.{Bpe, LinkGraph, MapBench, PipelineE2e}
+    // ids, not a count: the ContextCleaner may free older RDDs
+    // concurrently, which must not mask a new pin left behind
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    Similarity.ensureNavIndex(spark, sf) // the index build is not a query
+    Pins.releaseAll()
+    // early-free sites: every round checkpoint is unpinned by the time
+    // the call returns (rounds no other spec trains: not memoized)
+    val base = persisted
+    Bpe.trainMerges(spark, sf, Bpe.Rounds - 1)
+    assert((persisted -- base).isEmpty,
+      s"trainMerges left round checkpoints: ${persisted -- base}")
+    // one query per former per-module registry, plus the d84 beam
+    // walk (localCheckpoint'd hops, which Dataset.unpersist can't
+    // reach): everything pinned is freed by releaseAll
+    Seq[(String, () => Unit)](
+      "d02" -> (() => Dedup.minhashLsh(spark, sf).collect()),
+      "d14" -> (() => Dedup.d14ClustersAtScale(spark, sf).collect()),
+      "d12/d15" -> (() => {
+        Similarity.embedNearDupLsh(spark, sf).collect()
+        Similarity.d15EmbedClustersScale(spark, sf).collect()
+      }),
+      "d32/d36" -> (() => {
+        LinkGraph.d32Pagerank(spark, sf).collect()
+        LinkGraph.d36Hits(spark, sf).collect()
+      }),
+      "g14" -> (() => MapBench.g14FleetScan(spark, sf).collect()),
+      "d21" -> (() => PipelineE2e.d21PipelineE2e(spark, sf).collect()),
+      "d84" -> (() => Similarity.d84GraphSearch(spark, sf).collect())
+    ).foreach { case (name, run) =>
+      val before = persisted
+      run()
+      val held = persisted -- before
+      assert(held.nonEmpty, s"$name pinned nothing?")
+      // the walk unpins each superseded hop beam as it goes
+      if (name == "d84") assert(held.size == 4,
+        s"d84 holds $held, want its 3 checkpointed inputs + final beam")
+      Pins.releaseAll()
+      assert((persisted -- before).isEmpty,
+        s"$name leaked persisted RDDs past releaseAll: " +
+          s"${persisted -- before}")
+    }
   }
 
   test("edit-distance verify scores planted near-dups high") {
@@ -1256,7 +1286,7 @@ class PipelineSpec extends AnyFunSuite {
     // O(s²) but must land on the SAME clusters wherever band-hash
     // collisions between dissimilar docs don't occur (true on this
     // corpus by construction)
-    Dedup.releaseLshCache()
+    Pins.releaseAll()
     val full = Dedup.dedupClusters(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val star = Dedup.d14ClustersAtScale(spark, sf).collect()

@@ -7,18 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.WinnowKernel
 import graft.operators.{DataSelection, Dedup}
 
-/** Pin for the r17 d93 kernel move: WinnowKernel.fingerprints must
-  * reproduce the r16 exploded-gram md5 expression chain BIT-FOR-BIT
-  * on the real corpus (the registered query's oracle hash depends on
-  * every fingerprint value), including multi-byte UTF-8 text where
-  * character and byte offsets diverge. */
-class WinnowKernelSpec extends AnyFunSuite {
-  import SparkTestSession.spark
-
+/** The reference chain and the kernel form, shared with the
+  * KernelPropertySpec property over malformed UTF-8. */
+object WinnowKernelSpec {
   import DataSelection.{GramK, HashSpace, PosSpace, TextCap, WinW}
 
   /** The pre-r17 expression formulation, verbatim. */
-  private def referenceFp(base: org.apache.spark.sql.DataFrame) = {
+  def referenceFp(base: org.apache.spark.sql.DataFrame) = {
     val grams = base
       .select(col("doc_id"), col("np"),
         explode(sequence(lit(1L), col("np"))).as("p"),
@@ -40,16 +35,26 @@ class WinnowKernelSpec extends AnyFunSuite {
       .distinct()
   }
 
-  private def kernelFp(base: org.apache.spark.sql.DataFrame) =
+  def kernelFp(base: org.apache.spark.sql.DataFrame) =
     base.select(col("doc_id"), col("np"),
       explode(WinnowKernel.fingerprintsCol(
         col("t"), GramK, WinW, HashSpace, PosSpace)).as("fph"))
 
-  private def baseOf(df: org.apache.spark.sql.DataFrame) = df
+  def baseOf(df: org.apache.spark.sql.DataFrame) = df
     .select(col("doc_id"),
       substring(trim(col("text")), 1, TextCap).as("t"))
     .withColumn("np", (length(col("t")) - GramK + 1).cast("long"))
     .filter(col("np") >= 1)
+}
+
+/** Pin for the r17 d93 kernel move: WinnowKernel.fingerprints must
+  * reproduce the r16 exploded-gram md5 expression chain BIT-FOR-BIT
+  * on the real corpus (the registered query's oracle hash depends on
+  * every fingerprint value), including multi-byte UTF-8 text where
+  * character and byte offsets diverge. */
+class WinnowKernelSpec extends AnyFunSuite {
+  import SparkTestSession.spark
+  import WinnowKernelSpec.{baseOf, kernelFp, referenceFp}
 
   test("kernel equals the md5 expression chain on the corpus") {
     val base = baseOf(Dedup.corpusWithPlants(spark,
